@@ -2,7 +2,7 @@
 
 One thread issues ``LakeTable.point_lookup(...).collect()`` back to back on
 its own table handle, refreshing the snapshot before each operation.  With
-``poll_lag`` set, every ``POLL_EVERY``-th operation is instead a feed read,
+``poll_lag`` set, every second operation is instead a feed read,
 ``changes_since(applied_lsn - poll_lag)``: a consumer re-reading the last
 ``poll_lag`` LSNs of changes, so every poll covers the same span of the
 log whatever the commit phase.  Each answer is checked as it returns; a
@@ -19,8 +19,10 @@ from pyspark.sql import functions as F
 
 from harness import READER_GROUP
 
-
-POLL_EVERY = 4
+# every POLL_EVERY-th operation is a feed read: a run holds about one lap
+# or one tail window, so polls need this share to give a median of more
+# than a few samples
+POLL_EVERY = 2
 
 
 class Reader(threading.Thread):

@@ -4,14 +4,16 @@ Set-up materializes a parquet WAL from the seed and replays it once into a
 copy-on-write table (the warm-up, which also leaves the table at its
 steady size).  The measured loop then replays the same WAL again and
 again into that table, each lap with its LSNs shifted past the previous
-lap, so every lap is a real catch-up of N new events through
+lap and its lap index appended to every ``commit``, so every lap is a
+real catch-up of N new events, with new content, through
 ``CdcReplayer.replay_range_batches`` (pipelined, a few large LSN batches).
 Beside the laps runs the shared closed-loop reader (reader.py): point
-lookups, every fourth operation a ``changes_since`` feed read of the last
+lookups, every second operation a ``changes_since`` feed read of the last
 batch's worth of LSNs.
-Because every lap carries the whole WAL, the state after every lap must
-equal ``expected_final_state`` over the WAL; each lap's final snapshot is
-checked by time travel once the clock stops.
+Every lap touches the same keys, so the state after lap k must equal
+``expected_final_state`` over lap k's events alone; each lap's final
+snapshot is checked by time travel once the clock stops.  A lap that
+drops or skips events leaves rows of an earlier lap behind and fails.
 """
 
 from __future__ import annotations
@@ -38,22 +40,18 @@ N_REPOS, PATHS_PER_REPO, ZIPF = 200, 500, 3.0
 CONTENT_REPEAT_MAX = 4
 N_BUCKETS = 8
 END_SAMPLE = 2  # point reads checked against the oracle after the clock
-WAL_COPIES = 3  # set-up step repeated; setup_s takes its median
 
 
 def run(ctx: H.Ctx) -> H.Outcome:
     spark, tr, out = ctx.spark, ctx.tracer, H.Outcome()
     n, batch = EVENTS, (EVENTS + BATCHES - 1) // BATCHES
 
-    # --- set-up: materialize the WAL (repeated), seed + warm the table -- #
-    for i in range(WAL_COPIES):
-        t0 = time.perf_counter()
-        wal_dir = os.path.join(ctx.work_dir, f"wal-{i}")
-        gen_change_events(
-            spark, n, n_repos=N_REPOS, paths_per_repo=PATHS_PER_REPO, seed=ctx.seed,
-            zipf_exp=ZIPF, parallelism=8, content_repeat_max=CONTENT_REPEAT_MAX,
-        ).write.parquet(wal_dir)
-        out.setup_repeat_s.append(time.perf_counter() - t0)
+    # --- set-up: materialize the WAL, seed + warm the table ------------- #
+    wal_dir = os.path.join(ctx.work_dir, "wal")
+    gen_change_events(
+        spark, n, n_repos=N_REPOS, paths_per_repo=PATHS_PER_REPO, seed=ctx.seed,
+        zipf_exp=ZIPF, parallelism=8, content_repeat_max=CONTENT_REPEAT_MAX,
+    ).write.parquet(wal_dir)
     wal = spark.read.parquet(wal_dir)
     table = LakeTable.create(
         spark, os.path.join(ctx.work_dir, "table"), T.StructType(list(REPOS_SCHEMA.fields)),
@@ -61,13 +59,21 @@ def run(ctx: H.Ctx) -> H.Outcome:
     )
     replayer = CdcReplayer(table)
 
+    def lap_events(k: int):
+        """Lap k's events: the WAL with LSNs shifted by k laps and the lap
+        index appended to every commit (deletes keep their null)."""
+        return wal.withColumns({
+            "lsn": F.col("lsn") + F.lit(k * n),
+            "commit": F.concat(F.col("commit"), F.lit(f"/lap{k}")),
+        })
+
     def lap(k: int, size: int = batch):
-        wal_k = wal.withColumn("lsn", F.col("lsn") + F.lit(k * n))
         return replayer.replay_range_batches(
-            wal_k, k * n, (k + 1) * n, batch_size=size, strategy="broadcast", pipelined=True
+            lap_events(k), k * n, (k + 1) * n, batch_size=size, strategy="broadcast",
+            pipelined=True,
         )
 
-    H.log(f"wal copies {[round(x, 2) for x in out.setup_repeat_s]}")
+    H.log("wal written")
     lap(0, size=n)  # one batch: warms the same code for less fixed cost
     reader = Reader(tr, LakeTable(spark, table.root), _key_source(ctx.seed, 1), L.key_ok,
                     poll_lag=batch)
@@ -86,7 +92,7 @@ def run(ctx: H.Ctx) -> H.Outcome:
     out.clock_start = time.perf_counter()
     reader.start()
     k = 1
-    while not laps or H.another_round(out.clock_start, ctx.seconds, laps[-1][2]):
+    while H.another_round(out.clock_start, ctx.seconds, [s for _, _, s in laps]):
         snap0 = ctx.counters.snapshot()
         started = time.time()
         t0 = time.perf_counter()
@@ -104,15 +110,16 @@ def run(ctx: H.Ctx) -> H.Outcome:
 
     # --- after the clock: visibility record and oracle checks ---------- #
     snaps = [table.snapshot_at(v) for v in range(1, table.snapshot["version"] + 1)]
-    oracle = L.oracle_state(wal).cache()
     by_lap = {k: [s for s in snaps if k * n <= s["ledger"]["applied_lsn"] < (k + 1) * n]
               for k, _, _ in laps}
+    # digest keys: lap k's table state is k, its oracle -k (laps start at 1)
     states = {k: table.read(version=ss[-1]["version"]) for k, ss in by_lap.items() if ss}
-    digests = L.state_digests({-1: oracle, **states})
+    oracles = {-k: L.oracle_state(lap_events(k)) for k, _, _ in laps}
+    digests = L.state_digests({**oracles, **states})
     for k, started, _ in laps:
         lap_snaps = by_lap[k]
         # a wrong end-of-lap state fails every batch of the lap
-        state_ok = k in digests and digests[k] == digests[-1]
+        state_ok = k in digests and digests[k] == digests.get(-k)
         for b in range(BATCHES):
             hi = k * n + min((b + 1) * batch, n) - 1
             vis = next((s["committed_at"] for s in lap_snaps
@@ -125,13 +132,13 @@ def run(ctx: H.Ctx) -> H.Outcome:
     out.tally(reader.ok, reader.bad)
     keys = L.zipf_keys(np.random.default_rng([ctx.seed, 3]), END_SAMPLE, N_REPOS,
                        PATHS_PER_REPO, ZIPF)
-    for ok in L.sample_against_oracle(table, oracle, keys):
+    last = laps[-1][0]
+    for ok in L.sample_against_oracle(table, L.oracle_state(lap_events(last)), keys):
         out.check(ok)
-    oracle.unpersist()
     H.log("checks done")
 
     out.notes.update(laps=len(laps), events_per_lap=n, batches_per_lap=BATCHES,
-                     table_rows=digests[-1][0], lookups=len(reader.lookup_ms),
+                     table_rows=digests[-last][0], lookups=len(reader.lookup_ms),
                      polls=len(reader.poll_s))
     if ctx.traced:
         _layers(ctx, out, table, snaps, laps, counts, reader.poll_rows)

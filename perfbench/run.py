@@ -66,7 +66,6 @@ def end_to_end(out: H.Outcome, setup_s: float, rss_mb: float) -> tuple[dict, dic
         "lookup": f"p50 and p{lk_pct} of n={lk_n}",
         "events_per_s": f"median of n={len(out.events_per_s)}",
         "export_pass_s": f"median of n={len(out.export_pass_s)}",
-        "setup_repeats": len(out.setup_repeat_s),
     }
     return values, basis
 
@@ -109,9 +108,7 @@ def main() -> int:
         ctx = H.Ctx(spark, tracer, H.SparkCounters(spark, traced), args.seed,
                     args.seconds, work_dir, traced)
         out = _workload(args.workload)(ctx)
-        rep = out.setup_repeat_s
-        setup_s = out.window[0] - t_proc - sum(rep) + (H.median(rep) if rep else 0.0)
-        values, basis = end_to_end(out, setup_s, H.jvm_peak_rss_mb(spark))
+        values, basis = end_to_end(out, out.window[0] - t_proc, H.jvm_peak_rss_mb(spark))
         layer = {"session.start_s": session_s, **out.layer}
         for lname, secs in tracer.self_time_by_layer(out.clock_start, out.clock_end).items():
             layer[f"{lname}.self_s"] = secs

@@ -9,7 +9,7 @@ already published (the warm-up drain).
 Measured: a generator thread publishes one staged segment every
 ``INTERVAL_S`` by atomic rename, on a fixed schedule that does not wait
 for the tail (open loop).  Beside it runs the shared closed-loop reader
-(reader.py): seeded Zipf ``point_lookup`` calls back to back, every fourth
+(reader.py): seeded Zipf ``point_lookup`` calls back to back, every second
 operation a ``changes_since`` feed read of the last 10,000 LSNs.
 
 After the clock: the tail drains what was published, the stream stops,
@@ -50,7 +50,6 @@ INTERVAL_S = 0.25
 WARM_SEGMENTS = 2
 POLL_LAG = 20 * SEGMENT_EVENTS  # feed polls re-read the last 5 s of offered events
 END_SAMPLE = 2
-SEGMENT_COPIES = 3  # set-up step repeated; setup_s takes its median
 DRAIN_TIMEOUT_S = 90
 
 
@@ -129,11 +128,8 @@ def run(ctx: H.Ctx) -> H.Outcome:
     )
     table.overwrite(expected_final_state(seed_events, L.KEYS), lsn=SEED_EVENTS - 1)
     H.log("seed table written")
-    for i in range(SEGMENT_COPIES):
-        t0 = time.perf_counter()
-        segs = _write_segments(spark, ctx.seed, n_segs, os.path.join(ctx.work_dir, f"stage-{i}"))
-        out.setup_repeat_s.append(time.perf_counter() - t0)
-    H.log(f"segments staged {[round(x, 2) for x in out.setup_repeat_s]}")
+    segs = _write_segments(spark, ctx.seed, n_segs, os.path.join(ctx.work_dir, "stage"))
+    H.log("segments staged")
     wal_dir = os.path.join(ctx.work_dir, "wal")
     os.makedirs(wal_dir)
     for seg in segs[:WARM_SEGMENTS]:
