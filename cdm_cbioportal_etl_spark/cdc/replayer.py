@@ -69,7 +69,6 @@ class CdcReplayer:
         lsn_hi: int,
         batch_size: int,
         source: str = "wal",
-        count_batches: bool = False,
         pipelined: bool = True,
         strategy: str = "auto",
         salt_partitions: int = 0,
@@ -118,14 +117,13 @@ class CdcReplayer:
             report.prepare_sec.append(round(_time.perf_counter() - t0, 3))
             return out
 
-        def _apply(reduced: DataFrame, lo: int, hi: int, total: int) -> None:
+        def _apply(reduced: DataFrame, lo: int, hi: int) -> None:
             t0 = _time.perf_counter()
             stats = self.table.apply_prepared(
                 reduced,
                 batch_id=f"{source}:{lo}-{hi}",
                 source_watermarks={source: hi - 1},
                 extra_lineage={"lsn_range": [lo, hi]},
-                batch_total=total,
             )
             report.apply_sec.append(round(_time.perf_counter() - t0, 3))
             report.batches_applied += 1
@@ -134,8 +132,7 @@ class CdcReplayer:
 
         if not pipelined:
             for lo, hi in ranges:
-                total = _batch(lo, hi).count() if count_batches else -1
-                _apply(_prepare(lo, hi), lo, hi, total)
+                _apply(_prepare(lo, hi), lo, hi)
             return report
 
         from concurrent.futures import ThreadPoolExecutor
@@ -143,11 +140,10 @@ class CdcReplayer:
         with ThreadPoolExecutor(max_workers=1) as pool:
             fut = None
             for i, (lo, hi) in enumerate(ranges):
-                total = _batch(lo, hi).count() if count_batches else -1
                 reduced = fut.result() if fut is not None else _prepare(lo, hi)
                 nxt = ranges[i + 1] if i + 1 < len(ranges) else None
                 fut = pool.submit(_prepare, *nxt) if nxt else None
-                _apply(reduced, lo, hi, total)
+                _apply(reduced, lo, hi)
         return report
 
     def resume(self, events: DataFrame, lsn_hi: int, batch_size: int) -> ReplayReport:

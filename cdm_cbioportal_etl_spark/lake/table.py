@@ -46,7 +46,7 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
@@ -90,6 +90,28 @@ class ConcurrentCommitError(RuntimeError):
     """Another writer committed this version first (optimistic
     concurrency).  Refresh the snapshot and retry — merge() does this
     automatically; the LSN ledger makes the retried batch exactly-once."""
+
+    def __init__(self, message: str, base: int | None = None):
+        super().__init__(message)
+        # the committed version the losing change was derived from
+        self.base = base
+
+
+def _fsync_write(path: str, payload: str) -> None:
+    """Contents fsync'd, atomic rename, directory entry fsync'd — the
+    durability order of every pointer swing (VERSION, refs, catalog)."""
+    d = os.path.dirname(path)
+    tmp = os.path.join(d, f".{os.path.basename(path)}.{uuid.uuid4().hex}")
+    with open(tmp, "w") as fh:
+        fh.write(payload)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
+    dfd = os.open(d, os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
 
 
 def resolve_manifest(root: str, snap: dict[str, Any]) -> dict[str, Any]:
@@ -363,6 +385,15 @@ def _localize_snap(snap: dict[str, Any], root: str) -> int:
     return copied
 
 
+def _adopt(snap: dict[str, Any], src: dict[str, Any]) -> None:
+    """Give ``snap`` the content of ``src`` (another retained snapshot,
+    freshly loaded) while keeping its own ``version`` — the base its
+    commit arbitrates on."""
+    for k in [k for k in snap if k != "version"]:
+        del snap[k]
+    snap.update((k, v) for k, v in src.items() if k != "version")
+
+
 @dataclass
 class MergeStats:
     batch_rows: int
@@ -392,14 +423,12 @@ class LakeTable:
         self._meta_dir = os.path.join(self.root, "_meta")
         self._data_dir = os.path.join(self.root, "data")
         self._snap: dict[str, Any] | None = None
-        # serializes SAME-HANDLE mutations across threads: a merge
-        # prepares its manifest against one snapshot read and commits
-        # against self._snap — if another thread advances _snap in
-        # between, the CAS token is cut from the NEW base and the stale
-        # carry-over commits without a conflict (silent lost update).
-        # Cross-HANDLE / cross-process writers are already arbitrated by
-        # the O_EXCL token; this lock only covers the shared-handle case
-        # (e.g. a threaded fan-out merging through one catalog handle).
+        # serializes SAME-HANDLE merges across threads (e.g. a threaded
+        # fan-out merging through one catalog handle) so they queue
+        # instead of burning commit retries on each other.  Correctness
+        # does not depend on it: every commit is arbitrated on the base
+        # version its snapshot copy was taken from (_commit), so a
+        # change that another thread overtook raises instead of landing.
         import threading
 
         self._mutate_lock = threading.RLock()
@@ -455,17 +484,7 @@ class LakeTable:
             raise ValueError(f"ref {name!r} already exists at {self.root}")
         rec = {"version": int(version), "type": ref_type,
                "created_at": time.time()}
-        tmp = os.path.join(self._refs_dir(), f".{name}.{uuid.uuid4().hex}")
-        with open(tmp, "w") as fh:
-            json.dump(rec, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(tmp, path)
-        dfd = os.open(self._refs_dir(), os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
+        _fsync_write(path, json.dumps(rec))
 
     def refresh(self) -> None:
         version = self._read_ref(self.ref)["version"]
@@ -483,14 +502,17 @@ class LakeTable:
 
         Concurrency: commits are arbitrated PER REF by an O_EXCL
         transaction token named ``txn/<ref>-<base>`` — "the commit that
-        advanced <ref> past version <base>".  Of two writers whose
-        handles share the same base snapshot, exactly one creates the
-        token; the loser gets ConcurrentCommitError without having moved
-        the pointer (optimistic concurrency, the Iceberg/Delta commit
-        protocol on a posix filesystem), refreshes, and re-prepares
-        against the new head — ``merge`` does this automatically, and
-        the LSN ledger keeps the retried batch exactly-once.  Version
-        numbers are ONE global sequence shared by every ref (Iceberg's
+        advanced <ref> past version <base>".  ``base`` is the version
+        ``snap`` was copied from: its own ``version`` field, which only
+        this method ever writes (absent on a genesis commit).  Of two
+        writers — handles, threads or processes — deriving from the same
+        base, exactly one creates the token; the loser gets
+        ConcurrentCommitError without having moved the pointer
+        (optimistic concurrency, the Iceberg/Delta commit protocol on a
+        posix filesystem), refreshes, and re-prepares against the new
+        head — ``_retry_on_conflict`` does this for the committers that
+        retry, and the LSN ledger keeps the retried batch exactly-once.
+        Version numbers are ONE global sequence shared by every ref (Iceberg's
         snapshot-id model): the snap-file O_EXCL is pure number
         allocation — losing it to a writer on ANOTHER ref just re-draws
         the number; it is never the conflict signal, the token is.
@@ -514,9 +536,7 @@ class LakeTable:
         n_shards = int(
             (snap.get("properties") or {}).get("manifest_shards", 0) or 0
         )
-        # the committed snapshot this handle derived the new one from
-        # (its view before the mutation); None for the genesis commit
-        base = self._snap["version"] if self._snap else None
+        base = snap.get("version")
         txn_dir = os.path.join(self._meta_dir, "txn")
         os.makedirs(txn_dir, exist_ok=True)
         token = os.path.join(
@@ -530,7 +550,8 @@ class LakeTable:
                 f"{base} by another writer (or the token is a crashed "
                 f"writer's remnant if the ref pointer never moves — repair "
                 f"by deleting {token} and the manifest it names).  Refresh "
-                "and retry."
+                "and retry.",
+                base,
             ) from None
         # allocate the next free GLOBAL snapshot number; a collision here
         # is a writer on another ref taking the same number — re-draw
@@ -600,20 +621,73 @@ class LakeTable:
             _abort_cleanup()
             raise
         if self.ref == "main":
-            tmp = os.path.join(self._meta_dir, f".VERSION.{uuid.uuid4().hex}")
-            with open(tmp, "w") as fh:
-                fh.write(str(version))
-                fh.flush()
-                os.fsync(fh.fileno())
-            os.replace(tmp, os.path.join(self._meta_dir, "VERSION"))
-            dfd = os.open(self._meta_dir, os.O_RDONLY)
-            try:
-                os.fsync(dfd)
-            finally:
-                os.close(dfd)
+            _fsync_write(os.path.join(self._meta_dir, "VERSION"), str(version))
         else:
             self._write_ref(self.ref, version, "branch")
         self._snap = snap
+
+    def _commit_change(
+        self,
+        operation: str,
+        edit: Callable[[dict[str, Any]], tuple[dict, dict] | None],
+        batch_id: str | None = None,
+    ) -> dict[str, Any] | None:
+        """The one commit path for every change to an existing table.
+
+        Takes the one deep copy of the base snapshot, whose ``version``
+        stays the base ``_commit`` arbitrates on; ``edit(snap)`` changes
+        the copy in place and returns ``(changes, details)`` — the
+        commit's change descriptor ("cdf" stored change files, "none"
+        logically change-free, or "diff" snapshot-diff fallback) and its
+        lineage details — or None to commit nothing.  Appends one
+        lineage record (``at``, ``batch_id``, ``operation``, details)
+        trimmed to the newest ``max_lineage`` (resume needs only the
+        ledger, not old lineage), commits, and returns the committed
+        snapshot."""
+        snap = json.loads(json.dumps(self.snapshot))
+        out = edit(snap)
+        if out is None:
+            return None
+        snap["changes"], details = out
+        lineage = snap.get("lineage", [])
+        lineage.append(
+            {
+                "at": round(time.time(), 3),
+                "batch_id": batch_id or f"{operation}-{uuid.uuid4().hex[:8]}",
+                "operation": operation,
+                **details,
+            }
+        )
+        max_lineage = int(snap.get("properties", {}).get("max_lineage", 5000))
+        snap["lineage"] = lineage[-max_lineage:]
+        self._commit(snap)
+        return snap
+
+    # attempts after the first a retrying committer makes before it
+    # surfaces the conflict
+    COMMIT_RETRIES = 3
+
+    def _retry_on_conflict(self, attempt: Callable[[], Any]) -> Any:
+        """Run ``attempt`` (a change committed through ``_commit_change``)
+        and, when another writer advanced the ref past its base, refresh
+        and run it again.  Only for committers whose change stays valid
+        on any newer head (merges, equality deletes, delta appends — the
+        LSN ledger keeps a retried batch exactly-once); the rest raise
+        for the caller to re-decide.  A token whose ref never advances
+        is a crashed writer's orphan: retrying would spin, so it raises."""
+        for n in range(self.COMMIT_RETRIES + 1):
+            try:
+                return attempt()
+            except ConcurrentCommitError as e:
+                if n == self.COMMIT_RETRIES:
+                    raise
+                for _ in range(3):  # grace: racer mid-pointer-swing
+                    self.refresh()
+                    if self.snapshot["version"] > e.base:
+                        break
+                    time.sleep(0.05)
+                else:
+                    raise
 
     def snapshot_at(self, version: int) -> dict[str, Any]:
         """Load a historical snapshot manifest (time travel)."""
@@ -794,8 +868,6 @@ class LakeTable:
                 "since the fork (or the fork point was expired) — "
                 "re-stage on a fresh branch"
             )
-        snap = json.loads(json.dumps(self.snapshot_at(src_head)))
-        snap["version"] += 1  # _commit reallocates globally
         # the publish commit's change-data descriptor covers the WHOLE
         # staged segment (base..src_head), not just the branch's last
         # commit: concatenate the staged commits' stored change files
@@ -826,25 +898,23 @@ class LakeTable:
                 break          # descriptor can't carry both
             ch_files.extend(d.get("files") or [])
         if ch_ok and ch_sid is not None:
-            snap["changes"] = {
-                "mode": "cdf", "files": ch_files, "schema_id": ch_sid,
-            }
+            changes = {"mode": "cdf", "files": ch_files, "schema_id": ch_sid}
         elif ch_ok:
-            snap["changes"] = {"mode": "none"}
+            changes = {"mode": "none"}
         else:
-            snap["changes"] = {"mode": "diff"}
-        snap["lineage"].append(
-            {
-                "at": round(time.time(), 3),
-                "batch_id": f"publish-{branch}-{src_head}",
-                "operation": "publish",
+            changes = {"mode": "diff"}
+
+        def edit(snap):
+            _adopt(snap, self.snapshot_at(src_head))
+            return changes, {
                 "source_ref": branch,
                 "source_version": src_head,
                 "base_version": base,
             }
-        )
-        self._commit(snap)
-        published = snap["version"]
+
+        published = self._commit_change(
+            "publish", edit, f"publish-{branch}-{src_head}"
+        )["version"]
         self._write_ref(branch, published, "branch")
         return published
 
@@ -880,7 +950,6 @@ class LakeTable:
             if k not in [f["name"] for f in fields]:
                 raise ValueError(f"key column {k} not in schema")
         snap = {
-            "version": 0,
             "schema_id": 0,
             "schemas": {"0": fields},
             "key_cols": key_cols,
@@ -1027,31 +1096,25 @@ class LakeTable:
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", new):
             raise SchemaEvolutionError(f"invalid column name: {new!r}")
         self._reject_constrained(old, "rename")
-        snap = json.loads(json.dumps(cur))
-        sid = int(snap["schema_id"]) + 1
-        snap["schema_id"] = sid
-        snap["version"] += 1
-        snap["schemas"][str(sid)] = [
-            {
-                "name": new if m["name"] == old else m["name"],
-                "type": m["type"],
-                "id": m["id"],
-                "pname": m["pname"],
-            }
-            for m in metas
-        ]
-        snap["key_cols"] = [new if k == old else k for k in snap["key_cols"]]
-        self._col_list_props_updated(snap, old, new)
-        snap["changes"] = {"mode": "none"}  # metadata-only: no row changed
-        snap["lineage"] = list(snap.get("lineage", [])) + [
-            {
-                "batch_id": f"rename-{uuid.uuid4().hex[:8]}",
-                "operation": "rename_column",
-                "column": old,
-                "to": new,
-            }
-        ]
-        self._commit(snap)
+
+        def edit(snap):
+            sid = int(snap["schema_id"]) + 1
+            snap["schema_id"] = sid
+            snap["schemas"][str(sid)] = [
+                {
+                    "name": new if m["name"] == old else m["name"],
+                    "type": m["type"],
+                    "id": m["id"],
+                    "pname": m["pname"],
+                }
+                for m in metas
+            ]
+            snap["key_cols"] = [new if k == old else k for k in snap["key_cols"]]
+            self._col_list_props_updated(snap, old, new)
+            # metadata-only: no row changed
+            return {"mode": "none"}, {"column": old, "to": new}
+
+        self._commit_change("rename_column", edit)
 
     def drop_column(self, name: str) -> None:
         """ALTER TABLE ... DROP COLUMN — metadata-only.  The field id is
@@ -1068,25 +1131,19 @@ class LakeTable:
         if len(metas) == 1:
             raise SchemaEvolutionError("cannot drop the only column")
         self._reject_constrained(name, "drop")
-        snap = json.loads(json.dumps(cur))
-        sid = int(snap["schema_id"]) + 1
-        snap["schema_id"] = sid
-        snap["version"] += 1
-        snap["schemas"][str(sid)] = [
-            {"name": m["name"], "type": m["type"], "id": m["id"], "pname": m["pname"]}
-            for m in metas
-            if m["name"] != name
-        ]
-        self._col_list_props_updated(snap, name, None)
-        snap["changes"] = {"mode": "none"}
-        snap["lineage"] = list(snap.get("lineage", [])) + [
-            {
-                "batch_id": f"dropcol-{uuid.uuid4().hex[:8]}",
-                "operation": "drop_column",
-                "column": name,
-            }
-        ]
-        self._commit(snap)
+
+        def edit(snap):
+            sid = int(snap["schema_id"]) + 1
+            snap["schema_id"] = sid
+            snap["schemas"][str(sid)] = [
+                {"name": m["name"], "type": m["type"], "id": m["id"], "pname": m["pname"]}
+                for m in metas
+                if m["name"] != name
+            ]
+            self._col_list_props_updated(snap, name, None)
+            return {"mode": "none"}, {"column": name}
+
+        self._commit_change("drop_column", edit)
 
     def evolve_schema(self, new_schema: T.StructType) -> bool:
         """ALTER TABLE: add columns / widen types.  Returns True if changed.
@@ -1116,14 +1173,15 @@ class LakeTable:
         if new == cur:
             return False
         annotated = self._annotated_schema_json(self.snapshot, new_schema)
-        snap = dict(self.snapshot)
-        snap["version"] = snap["version"] + 1
-        sid = snap["schema_id"] + 1
-        snap["schema_id"] = sid
-        snap = json.loads(json.dumps(snap))  # deep copy
-        snap["schemas"][str(sid)] = annotated
-        snap["changes"] = {"mode": "none"}  # metadata-only: no row changed
-        self._commit(snap)
+
+        def edit(snap):
+            sid = snap["schema_id"] + 1
+            snap["schema_id"] = sid
+            snap["schemas"][str(sid)] = annotated
+            # metadata-only: no row changed
+            return {"mode": "none"}, {"schema_id": sid}
+
+        self._commit_change("evolve_schema", edit)
         return True
 
     # ------------------------------------------------------------------ #
@@ -1904,22 +1962,26 @@ class LakeTable:
         overwrite with the default lsn=0 would re-open the exactly-once
         gate and let already-applied WAL batches re-merge on top of the
         overwritten state."""
-        snap = json.loads(json.dumps(self.snapshot))
         df = self._align(df, self.schema, with_lsn=False)
         self._enforce_constraints(df, "overwrite data")
         staged = df.withColumn(LSN_COL, F.lit(lsn).cast("long")).withColumn(
             "_bucket", self._bucket_expr()
         )
-        mapping = self._write_bucket_files(staged, snap["schema_id"])
-        snap["version"] += 1
-        snap["buckets"] = mapping
-        snap.pop("dv", None)  # full replace: no prior positions survive
-        snap.pop("eqdel", None)
-        snap["bucket_rows"] = {b: self._files_rows(f) for b, f in mapping.items()}
-        cur = snap["ledger"]["applied_lsn"]
-        snap["ledger"]["applied_lsn"] = lsn if reset_ledger else max(cur, lsn)
-        snap["changes"] = {"mode": "diff"}  # full replace: no per-row log
-        self._commit(snap)
+
+        def edit(snap):
+            mapping = self._write_bucket_files(staged, snap["schema_id"])
+            snap["buckets"] = mapping
+            snap.pop("dv", None)  # full replace: no prior positions survive
+            snap.pop("eqdel", None)
+            snap["bucket_rows"] = {
+                b: self._files_rows(f) for b, f in mapping.items()
+            }
+            cur = snap["ledger"]["applied_lsn"]
+            snap["ledger"]["applied_lsn"] = lsn if reset_ledger else max(cur, lsn)
+            # full replace: no per-row log
+            return {"mode": "diff"}, {"lsn": lsn, "reset_ledger": reset_ledger}
+
+        self._commit_change("overwrite", edit)
 
     # ------------------------------------------------------------------ #
     # MERGE INTO
@@ -1941,6 +2003,32 @@ class LakeTable:
                 "winner_broadcast_threshold", self.WINNER_BROADCAST_THRESHOLD
             )
         )
+
+    def _new_events(
+        self, batch: DataFrame, lsn_col: str, op_col: str, applied: int
+    ) -> DataFrame:
+        """The batch's events above the ledger watermark ``applied``,
+        after the CHECK gate every prepared batch passes (merge, replayer
+        and tail alike)."""
+        target = self.schema
+        batch = batch.withColumn(lsn_col, F.col(lsn_col).cast("long"))
+        # KEY columns must be cast to the declared schema types BEFORE
+        # anything hashes them: Spark's murmur3 is type-sensitive
+        # (hash(0 as int) != hash(0 as bigint)), so an INT-typed key from
+        # e.g. a SQL VALUES literal would bucket to the wrong file and
+        # split the key's versions across buckets — found as a DELETE
+        # that left its row behind.  Non-key columns are cast at the
+        # payload projections.
+        for k in self.key_cols:
+            batch = batch.withColumn(k, F.col(k).cast(target[k].dataType))
+        new_events = batch.filter(F.col(lsn_col) > F.lit(applied))
+        if self._constraints():
+            # one combinable aggregate, only when the table declares
+            # constraints; deletes carry no payload
+            self._enforce_constraints(
+                new_events.filter(F.col(op_col) != "delete"), "merge batch"
+            )
+        return new_events
 
     def prepare_batch(
         self,
@@ -1992,17 +2080,7 @@ class LakeTable:
             # path this docstring warns about
             raise ValueError(f"invalid prepare strategy: {strategy}")
 
-        batch = batch.withColumn(lsn_col, F.col(lsn_col).cast("long"))
-        # KEY columns must be cast to the declared schema types BEFORE
-        # anything hashes them: Spark's murmur3 is type-sensitive
-        # (hash(0 as int) != hash(0 as bigint)), so an INT-typed key from
-        # e.g. a SQL VALUES literal would bucket to the wrong file and
-        # split the key's versions across buckets — found as a DELETE
-        # that left its row behind.  Non-key columns are cast at the
-        # payload projections.
-        for k in keys:
-            batch = batch.withColumn(k, F.col(k).cast(target[k].dataType))
-        new_events = batch.filter(F.col(lsn_col) > F.lit(applied))
+        new_events = self._new_events(batch, lsn_col, op_col, applied)
 
         data_cols = [f.name for f in target.fields]
         have = set(new_events.columns)
@@ -2166,17 +2244,7 @@ class LakeTable:
         target = self.schema
         keys = self.key_cols
         applied = self.snapshot["ledger"]["applied_lsn"]
-        batch = batch.withColumn(lsn_col, F.col(lsn_col).cast("long"))
-        # KEY columns must be cast to the declared schema types BEFORE
-        # anything hashes them: Spark's murmur3 is type-sensitive
-        # (hash(0 as int) != hash(0 as bigint)), so an INT-typed key from
-        # e.g. a SQL VALUES literal would bucket to the wrong file and
-        # split the key's versions across buckets — found as a DELETE
-        # that left its row behind.  Non-key columns are cast at the
-        # payload projections.
-        for k in keys:
-            batch = batch.withColumn(k, F.col(k).cast(target[k].dataType))
-        new_events = batch.filter(F.col(lsn_col) > F.lit(applied))
+        new_events = self._new_events(batch, lsn_col, op_col, applied)
         data_cols = [f.name for f in target.fields if f.name not in keys]
         have = set(new_events.columns)
         is_up = F.col(op_col) != "delete"
@@ -2258,12 +2326,6 @@ class LakeTable:
         broadcast of an unbounded winner set).
         """
         batch_total = batch.count() if count_batch else -1
-        if self._constraints():
-            # one combinable aggregate over the batch, only when the
-            # table declares constraints; deletes carry no payload
-            self._enforce_constraints(
-                batch.filter(F.col(op_col) != "delete"), "merge batch"
-            )
 
         def _prep() -> DataFrame:
             if partial_update:
@@ -2273,62 +2335,37 @@ class LakeTable:
                 strategy=strategy, salt_partitions=salt_partitions,
             )
 
-        # same-handle serialization (see __init__._mutate_lock): prepare
-        # reads a snapshot and apply commits against self._snap — both
-        # must see ONE consistent view per attempt.  Other handles and
-        # processes still race through the O_EXCL token protocol below.
+        # same-handle serialization (see __init__._mutate_lock).  A lost
+        # commit race redoes prepare+apply against the new head (prepare
+        # again, not just apply — the racer may have evolved the schema
+        # or rebucketed); the LSN ledger keeps the retried batch
+        # exactly-once: rows the racer already applied filter out.
         with self._mutate_lock:
-            reduced = _prep()
-            # optimistic-concurrency retry: if another writer wins our
-            # commit version, refresh and redo prepare+apply against the
-            # new snapshot (prepare again, not just apply — the racer may
-            # have evolved the schema or rebucketed).  The LSN ledger
-            # keeps the retried batch exactly-once: rows the racer
-            # already applied filter out.
-            retries = int(
-                self.snapshot.get("properties", {}).get("commit_retries", 3)
+            stats = self._retry_on_conflict(
+                lambda: self.apply_prepared(
+                    _prep(),
+                    batch_id=batch_id,
+                    source_watermarks=source_watermarks,
+                    extra_lineage=extra_lineage,
+                    batch_total=batch_total,
+                    applied_segments=applied_segments,
+                    mode=mode,
+                    partial_update=partial_update,
+                )
             )
-            for attempt in range(retries + 1):
-                try:
-                    stats = self.apply_prepared(
-                        reduced,
-                        batch_id=batch_id,
-                        source_watermarks=source_watermarks,
-                        extra_lineage=extra_lineage,
-                        batch_total=batch_total,
-                        applied_segments=applied_segments,
-                        mode=mode,
-                        partial_update=partial_update,
-                    )
-                    break
-                except ConcurrentCommitError:
-                    if attempt == retries:
-                        raise
-                    import time as _t
-
-                    old_v = self.snapshot["version"]
-                    advanced = False
-                    for _ in range(3):  # grace: racer mid-pointer-swing
-                        self.refresh()
-                        if self.snapshot["version"] > old_v:
-                            advanced = True
-                            break
-                        _t.sleep(0.05)
-                    if not advanced:
-                        # manifest exists but no one ever published it: a
-                        # crashed writer's orphan — retrying would spin
-                        raise
-                    reduced = _prep()
-        # inline maintenance policy: MOR delta appends and COW file
-        # skipping both accumulate files per bucket; with the
-        # ``auto_compact_files`` property set, fold any bucket past the
-        # threshold right after the merge commit (its own snapshot —
-        # exactly-once semantics of the merge are already durable).
-        # Default off: maintenance scheduling is an operator decision and
-        # keeps benchmark runs comparable.
-        auto = int(self.snapshot.get("properties", {}).get("auto_compact_files", 0))
-        if auto > 0:
-            self.compact(max_files_per_bucket=auto, fold_all_deltas=False)
+            # inline maintenance policy: MOR delta appends and COW file
+            # skipping both accumulate files per bucket; with the
+            # ``auto_compact_files`` property set, fold any bucket past
+            # the threshold right after the merge commit (its own
+            # snapshot — exactly-once semantics of the merge are already
+            # durable).  Under the lock, so a same-handle merge cannot
+            # overtake it.  Default off: maintenance scheduling is an
+            # operator decision and keeps benchmark runs comparable.
+            auto = int(
+                self.snapshot.get("properties", {}).get("auto_compact_files", 0)
+            )
+            if auto > 0:
+                self.compact(max_files_per_bucket=auto, fold_all_deltas=False)
         return stats
 
     def apply_prepared(
@@ -2365,7 +2402,34 @@ class LakeTable:
         import time as _time
 
         t0 = _time.perf_counter()
-        snap = json.loads(json.dumps(self.snapshot))
+        extra = dict(extra_lineage or {})
+        operation = extra.pop("operation", "merge")
+        result: list[MergeStats] = []
+
+        def edit(snap):
+            stats, change = self._apply_edit(
+                snap, reduced, t0, batch_total, source_watermarks,
+                applied_segments, mode, partial_update,
+            )
+            result.append(stats)
+            if change is None:
+                return None  # everything already applied
+            changes, details = change
+            return changes, {**details, **extra}
+
+        self._commit_change(operation, edit, batch_id)
+        return result[0]
+
+    def _apply_edit(
+        self, snap, reduced, t0, batch_total, source_watermarks,
+        applied_segments, mode, partial_update,
+    ) -> tuple[MergeStats, tuple[dict, dict] | None]:
+        """Body of apply_prepared against the base-snapshot copy ``snap``:
+        writes the merged files and updates ``snap`` in place.  Returns
+        the stats and the ``(changes, lineage details)`` to commit, or
+        None for a batch whose events were all applied already."""
+        import time as _time
+
         target = self.schema
         keys = self.key_cols
         applied = snap["ledger"]["applied_lsn"]
@@ -2397,7 +2461,7 @@ class LakeTable:
                 touched_buckets=0,
                 total_buckets=snap["n_buckets"], upserts=0, deletes=0,
                 rows_after=-1, skipped_already_applied=batch_total,
-            )
+            ), None
         touched = {int(b) for b in agg["buckets"]}
         t_gate = _time.perf_counter()
 
@@ -2421,8 +2485,8 @@ class LakeTable:
                 )
             return self._apply_dv(
                 reduced, snap, agg, touched, applied, batch_total,
-                count_batch, batch_id, source_watermarks, extra_lineage,
-                applied_segments, t0, t_gate, n_part,
+                count_batch, source_watermarks, applied_segments, t0,
+                t_gate, n_part,
             )
         if partial_update and mode == "mor" and not partial_table:
             # a partial delta row is NOT a row version: the default MOR
@@ -2491,8 +2555,8 @@ class LakeTable:
                 bucket_rows[b] = bucket_rows.get(b, 0) + self._files_rows(files)
             return self._finish_apply(
                 snap, agg, touched, buckets_meta, bucket_rows, applied,
-                batch_total, count_batch, batch_id, source_watermarks,
-                extra_lineage, applied_segments, t0, t_gate, t_write,
+                batch_total, count_batch, source_watermarks,
+                applied_segments, t0, t_gate, t_write,
             )
         # ---- COW file skipping (Iceberg's real rewrite granularity) ----
         # Within each touched bucket, a base file whose key-range stats
@@ -2803,8 +2867,8 @@ class LakeTable:
         )
         return self._finish_apply(
             snap, agg, touched, buckets_meta, bucket_rows, applied,
-            batch_total, count_batch, batch_id, source_watermarks,
-            extra_lineage, applied_segments, t0, t_gate, t_write,
+            batch_total, count_batch, source_watermarks,
+            applied_segments, t0, t_gate, t_write,
             carried_files=sum(len(v) for v in carried.values()),
             change_info=(
                 {
@@ -2819,9 +2883,9 @@ class LakeTable:
 
     def _apply_dv(
         self, reduced, snap, agg, touched, applied, batch_total,
-        count_batch, batch_id, source_watermarks, extra_lineage,
-        applied_segments, t0, t_gate, n_part,
-    ) -> MergeStats:
+        count_batch, source_watermarks, applied_segments, t0, t_gate,
+        n_part,
+    ) -> tuple[MergeStats, tuple[dict, dict]]:
         """Deletion-vector merge (the Iceberg-v2 / Delta deletion-vector
         shape): superseded row VERSIONS are invalidated *positionally* —
         a per-commit sidecar of ``(file, row_index)`` pairs — and winner
@@ -3171,8 +3235,8 @@ class LakeTable:
             snap["dv"] = list(snap.get("dv", [])) + [dv_entry]
         return self._finish_apply(
             snap, agg, touched, buckets_meta, bucket_rows, applied,
-            batch_total, count_batch, batch_id, source_watermarks,
-            extra_lineage, applied_segments, t0, t_gate, t_write,
+            batch_total, count_batch, source_watermarks,
+            applied_segments, t0, t_gate, t_write,
             change_info=(
                 {
                     "mode": "cdf",
@@ -3186,22 +3250,19 @@ class LakeTable:
 
     def _finish_apply(
         self, snap, agg, touched, buckets_meta, bucket_rows, applied,
-        batch_total, count_batch, batch_id, source_watermarks,
-        extra_lineage, applied_segments, t0, t_gate, t_write,
+        batch_total, count_batch, source_watermarks, applied_segments,
+        t0, t_gate, t_write,
         carried_files: int = 0,
         change_info: dict | None = None,
-    ) -> MergeStats:
-        """Shared commit tail of apply_prepared (cow + mor branches):
-        snapshot bookkeeping, ledger advance, lineage, atomic commit."""
+    ) -> tuple[MergeStats, tuple[dict, dict]]:
+        """Shared tail of apply_prepared (cow + mor + dv branches):
+        snapshot bookkeeping, ledger advance, stats and lineage details.
+        ``change_info`` is "cdf" (stored change files) or, by default,
+        "diff" (pre-images not captured — snapshot-diff feed)."""
         import time as _time
 
         rows_after = sum(bucket_rows.values())
         snap["bucket_rows"] = bucket_rows
-        # per-commit change descriptor: "cdf" (stored change files),
-        # "none" (structural commit, logically change-free), or "diff"
-        # (pre-images not captured — feed falls back to snapshot diff)
-        snap["changes"] = change_info or {"mode": "diff"}
-        snap["version"] += 1
         snap["buckets"] = buckets_meta
         snap["ledger"]["applied_lsn"] = max(applied, int(agg["max_lsn"]))
         if source_watermarks:
@@ -3247,12 +3308,7 @@ class LakeTable:
             timings=timings,
             carried_files=carried_files,
         )
-        lineage = {
-            "at": round(_time.time(), 3),
-            "batch_id": batch_id or uuid.uuid4().hex,
-            # explicit operation kind: history() must not infer it from a
-            # USER-supplied batch_id (e.g. 'compact-2026-08' is a merge)
-            "operation": "merge",
+        details = {
             "lsn_max": int(agg["max_lsn"]),
             "batch_rows": stats.batch_rows,
             "batch_keys": stats.batch_keys,
@@ -3262,18 +3318,7 @@ class LakeTable:
             "carried_files": carried_files,
             "timings": timings,
         }
-        if extra_lineage:
-            lineage.update(extra_lineage)
-        snap["lineage"].append(lineage)
-        # lineage retention: the manifest must not grow O(total merges
-        # ever) on a long-lived stream — keep the newest `max_lineage`
-        # records (resume needs only the ledger watermark, which is
-        # separate; older lineage belongs in an external metrics sink)
-        max_lineage = int(snap.get("properties", {}).get("max_lineage", 5000))
-        if len(snap["lineage"]) > max_lineage:
-            snap["lineage"] = snap["lineage"][-max_lineage:]
-        self._commit(snap)
-        return stats
+        return stats, (change_info or {"mode": "diff"}, details)
 
     # ------------------------------------------------------------------ #
     # maintenance
@@ -3781,13 +3826,16 @@ class LakeTable:
         raw = self.snapshot.get("properties", {}).get("check_constraints")
         return json.loads(raw) if raw else {}
 
-    def _enforce_constraints(self, df: DataFrame, what: str) -> None:
+    def _enforce_constraints(
+        self, df: DataFrame, what: str, cons: dict[str, str] | None = None
+    ) -> None:
         """SQL CHECK semantics: a row violates only when the expression
         is FALSE (NULL passes — which also makes partial-image batches,
         whose nulls mean 'unchanged', check only the values they carry).
-        One combinable aggregate over ``df``; raises with per-constraint
-        violation counts."""
-        cons = self._constraints()
+        One combinable aggregate over ``df`` against ``cons`` (default:
+        the table's constraints); raises with per-constraint violation
+        counts."""
+        cons = self._constraints() if cons is None else cons
         if not cons:
             return
         aggs = [
@@ -3819,43 +3867,25 @@ class LakeTable:
         probe = dict(cons)
         probe[name] = expr
         # validate the expression parses AND existing rows satisfy it
-        snap = json.loads(json.dumps(self.snapshot))
-        snap["properties"]["check_constraints"] = json.dumps(probe)
-        self._snap = snap  # stage locally so _enforce sees the new one
-        try:
-            self._enforce_constraints(self.read(), "existing table rows")
-        except Exception:
-            self.refresh()  # unstage
-            raise
-        snap["version"] += 1
-        snap["changes"] = {"mode": "none"}  # metadata-only commit
-        snap["lineage"].append(
-            {
-                "at": round(time.time(), 3),
-                "batch_id": f"add-constraint-{name}",
-                "operation": "add_constraint",
-                "constraint": {name: expr},
-            }
-        )
-        self._commit(snap)
+        self._enforce_constraints(self.read(), "existing table rows", probe)
+
+        def edit(snap):
+            snap["properties"]["check_constraints"] = json.dumps(probe)
+            return {"mode": "none"}, {"constraint": {name: expr}}
+
+        self._commit_change("add_constraint", edit, f"add-constraint-{name}")
 
     def drop_constraint(self, name: str) -> None:
         cons = self._constraints()
         if name not in cons:
             raise ValueError(f"no such constraint: {name!r}")
         del cons[name]
-        snap = json.loads(json.dumps(self.snapshot))
-        snap["properties"]["check_constraints"] = json.dumps(cons)
-        snap["version"] += 1
-        snap["changes"] = {"mode": "none"}
-        snap["lineage"].append(
-            {
-                "at": round(time.time(), 3),
-                "batch_id": f"drop-constraint-{name}",
-                "operation": "drop_constraint",
-            }
-        )
-        self._commit(snap)
+
+        def edit(snap):
+            snap["properties"]["check_constraints"] = json.dumps(cons)
+            return {"mode": "none"}, {}
+
+        self._commit_change("drop_constraint", edit, f"drop-constraint-{name}")
 
     # properties an existing table cannot safely change: flipping
     # partial-image semantics re-interprets ALREADY-WRITTEN delta rows
@@ -3893,21 +3923,13 @@ class LakeTable:
                         f"property {k!r} needs a non-negative "
                         f"{caster.__name__}, got {props[k]!r}"
                     ) from None
-        snap = json.loads(json.dumps(self.snapshot))
-        snap.setdefault("properties", {}).update(
-            {str(k): str(v) for k, v in props.items()}
-        )
-        snap["version"] += 1
-        snap["changes"] = {"mode": "none"}
-        snap["lineage"].append(
-            {
-                "at": round(time.time(), 3),
-                "batch_id": "set-properties",
-                "operation": "set_properties",
-                "keys": sorted(str(k) for k in props),
-            }
-        )
-        self._commit(snap)
+        def edit(snap):
+            snap.setdefault("properties", {}).update(
+                {str(k): str(v) for k, v in props.items()}
+            )
+            return {"mode": "none"}, {"keys": sorted(str(k) for k in props)}
+
+        self._commit_change("set_properties", edit, "set-properties")
 
     def delete_where(self, cond) -> "MergeStats":
         """``DELETE FROM t WHERE cond`` as a COW/MOR merge: resolve the
@@ -3971,7 +3993,6 @@ class LakeTable:
         staged = keys_df.select(
             *[F.col(k).cast(target[k].dataType).alias(k) for k in keys]
         ).distinct()
-        staged_buckets = int(self.snapshot["n_buckets"])
         agg = staged.select(
             F.count(F.lit(1)).alias("n"),
             F.collect_set(self._bucket_expr()).alias("bs"),
@@ -3996,53 +4017,37 @@ class LakeTable:
             for fn in sorted(os.listdir(out_abs))
             if fn.endswith(".parquet")
         ]
-        retries = int(
-            self.snapshot.get("properties", {}).get("commit_retries", 3)
-        )
-        for attempt in range(retries + 1):
-            snap = json.loads(json.dumps(self.snapshot))
-            lsn = int(snap["ledger"]["applied_lsn"]) + 1
-            if int(snap["n_buckets"]) != staged_buckets:
+        # n_buckets -> the staged keys' bucket ids under that layout
+        bucket_ids = {int(self.snapshot["n_buckets"]): agg["bs"]}
+
+        def edit(snap):
+            nb = int(snap["n_buckets"])
+            if nb not in bucket_ids:
                 # a concurrent rebucket won an earlier commit race: the
                 # staged bucket ids are for the OLD layout — recompute
                 # under the new one (one small job) or the entry's scope
                 # filter would skip buckets holding matching keys
-                staged_buckets = int(snap["n_buckets"])
-                agg = staged.select(
-                    F.count(F.lit(1)).alias("n"),
+                bucket_ids[nb] = staged.select(
                     F.collect_set(
-                        F.pmod(
-                            F.xxhash64(*keys), F.lit(staged_buckets)
-                        ).cast("int")
-                    ).alias("bs"),
-                ).collect()[0]
+                        F.pmod(F.xxhash64(*keys), F.lit(nb)).cast("int")
+                    )
+                ).collect()[0][0]
+            lsn = int(snap["ledger"]["applied_lsn"]) + 1
             snap["eqdel"] = list(snap.get("eqdel", [])) + [
                 {
                     "files": files,
                     "rows": n,
-                    "buckets": sorted(int(b) for b in agg["bs"]),
+                    "buckets": sorted(int(b) for b in bucket_ids[nb]),
                     "lsn": lsn,
                 }
             ]
             snap["ledger"]["applied_lsn"] = lsn
-            snap["version"] += 1
-            snap["lineage"].append(
-                {
-                    "batch_id": batch_id or f"delete_keys-{uuid.uuid4().hex[:8]}",
-                    "operation": "delete_keys",
-                    "lsn_max": lsn,
-                    "deleted_keys": n,
-                }
-            )
-            snap["changes"] = {"mode": "diff"}
-            try:
-                self._commit(snap)
-                return lsn
-            except ConcurrentCommitError:
-                if attempt == retries:
-                    raise
-                self.refresh()
-        return lsn
+            return {"mode": "diff"}, {"lsn_max": lsn, "deleted_keys": n}
+
+        committed = self._retry_on_conflict(
+            lambda: self._commit_change("delete_keys", edit, batch_id)
+        )
+        return int(committed["ledger"]["applied_lsn"])
 
     def update_where(self, cond, assignments: dict) -> "MergeStats":
         """``UPDATE t SET col = expr WHERE cond`` as a COW/MOR merge:
@@ -4101,110 +4106,106 @@ class LakeTable:
         the next COW rewrite of its bucket AND defeats key-range file
         skipping within the bucket).  The partition count comes from
         manifest row counts — no extra counting job."""
-        snap = json.loads(json.dumps(self.snapshot))
-        todo = {
-            int(b) for b, files in snap["buckets"].items()
-            if len(files) > max_files_per_bucket
-            # MOR delta files always qualify (default): compaction
-            # resolves latest-per-key, drops tombstones, and rewrites the
-            # bucket as plain base files — repaying the read tax.  Files
-            # carrying dead dv rows qualify the same way: the rewrite
-            # materializes the anti-join and retires the kill lists.
-            or (
-                fold_all_deltas
-                and any(
-                    f.get("delta", False) or f.get("dv_rows", 0) > 0
-                    for f in files
+        todo: set[int] = set()
+
+        def edit(snap):
+            todo.update(
+                int(b) for b, files in snap["buckets"].items()
+                if len(files) > max_files_per_bucket
+                # MOR delta files always qualify (default): compaction
+                # resolves latest-per-key, drops tombstones, and rewrites the
+                # bucket as plain base files — repaying the read tax.  Files
+                # carrying dead dv rows qualify the same way: the rewrite
+                # materializes the anti-join and retires the kill lists.
+                or (
+                    fold_all_deltas
+                    and any(
+                        f.get("delta", False) or f.get("dv_rows", 0) > 0
+                        for f in files
+                    )
+                )
+                # buckets under an equality-delete entry qualify the same
+                # way: the rewrite materializes the kills and retires the
+                # per-scan anti-join
+                or (
+                    fold_all_deltas
+                    and any(
+                        int(b) in set(e.get("buckets", []))
+                        for e in snap.get("eqdel", [])
+                    )
                 )
             )
-            # buckets under an equality-delete entry qualify the same
-            # way: the rewrite materializes the kills and retires the
-            # per-scan anti-join
-            or (
-                fold_all_deltas
-                and any(
-                    int(b) in set(e.get("buckets", []))
-                    for e in snap.get("eqdel", [])
-                )
+            if not todo:
+                return None
+            df = self.read(buckets=todo, with_lsn=True).withColumn(
+                "_bucket", self._bucket_expr()
             )
-        }
-        if not todo:
-            return 0
-        df = self.read(buckets=todo, with_lsn=True).withColumn(
-            "_bucket", self._bucket_expr()
-        )
-        zorder_by = snap.get("properties", {}).get("zorder_by")
-        if zorder_by:
-            # the table is z-clustered (cluster_files): re-sort the
-            # rewritten buckets along the SAME curve (fresh equal-
-            # population bounds over the rewritten rows) so compaction —
-            # including MOR delta folding — preserves secondary-column
-            # file skipping instead of silently reverting to key order
-            cluster_by = [c for c in str(zorder_by).split(",") if c]
-            n_bins = int(snap["properties"].get("zorder_bins", 64))
-            fpb = int(snap["properties"].get("zorder_files_per_bucket", 4))
-            bounds = self._zorder_bounds(df, cluster_by, n_bins)
-            if target_file_rows:
+            zorder_by = snap.get("properties", {}).get("zorder_by")
+            if zorder_by:
+                # the table is z-clustered (cluster_files): re-sort the
+                # rewritten buckets along the SAME curve (fresh equal-
+                # population bounds over the rewritten rows) so compaction —
+                # including MOR delta folding — preserves secondary-column
+                # file skipping instead of silently reverting to key order
+                cluster_by = [c for c in str(zorder_by).split(",") if c]
+                n_bins = int(snap["properties"].get("zorder_bins", 64))
+                fpb = int(snap["properties"].get("zorder_files_per_bucket", 4))
+                bounds = self._zorder_bounds(df, cluster_by, n_bins)
+                if target_file_rows:
+                    rows = self._todo_rows(snap, todo)
+                    n_parts = max(1, -(-rows // int(target_file_rows)))
+                else:
+                    n_parts = max(1, len(todo) * fpb)
+                staged = df.withColumn(
+                    "_zv", self._zvalue_expr(cluster_by, bounds)
+                ).repartitionByRange(n_parts, "_bucket", "_zv")
+                mapping = self._write_bucket_files(
+                    staged,
+                    snap["schema_id"],
+                    pre_bucketed=True,
+                    sort_cols=["_zv"],
+                    drop_after_sort=["_zv"],
+                )
+            elif target_file_rows:
                 rows = self._todo_rows(snap, todo)
                 n_parts = max(1, -(-rows // int(target_file_rows)))
+                mapping = self._write_bucket_files(
+                    df.repartitionByRange(n_parts, "_bucket", *self.key_cols),
+                    snap["schema_id"],
+                    pre_bucketed=True,
+                )
             else:
-                n_parts = max(1, len(todo) * fpb)
-            staged = df.withColumn(
-                "_zv", self._zvalue_expr(cluster_by, bounds)
-            ).repartitionByRange(n_parts, "_bucket", "_zv")
-            mapping = self._write_bucket_files(
-                staged,
-                snap["schema_id"],
-                pre_bucketed=True,
-                sort_cols=["_zv"],
-                drop_after_sort=["_zv"],
+                mapping = self._write_bucket_files(df, snap["schema_id"])
+            # a todo bucket absent from the write output resolved to ZERO live
+            # rows (e.g. every key tombstoned in MOR deltas) — it must still
+            # be compacted, to an empty file list, or its stale delta files
+            # would silently survive
+            for b in todo:
+                mapping.setdefault(str(b), [])
+            snap["buckets"].update(mapping)
+            # dv entries whose every covered bucket was rewritten are retired
+            # (their kill positions referenced files this commit dropped);
+            # entries straddling untouched buckets stay, with stale positions
+            # for the rewritten buckets — harmless: the anti-join matches on
+            # file path and the old paths are gone from every future scan
+            for field in ("dv", "eqdel"):
+                if snap.get(field):
+                    kept = []
+                    for e in snap[field]:
+                        rem = sorted(set(e.get("buckets", [])) - todo)
+                        if rem:
+                            kept.append({**e, "buckets": rem})
+                    snap[field] = kept
+                    if not kept:
+                        del snap[field]
+            snap["bucket_rows"] = snap.get("bucket_rows", {})
+            snap["bucket_rows"].update(
+                {b: self._files_rows(f) for b, f in mapping.items()}
             )
-        elif target_file_rows:
-            rows = self._todo_rows(snap, todo)
-            n_parts = max(1, -(-rows // int(target_file_rows)))
-            mapping = self._write_bucket_files(
-                df.repartitionByRange(n_parts, "_bucket", *self.key_cols),
-                snap["schema_id"],
-                pre_bucketed=True,
-            )
-        else:
-            mapping = self._write_bucket_files(df, snap["schema_id"])
-        # a todo bucket absent from the write output resolved to ZERO live
-        # rows (e.g. every key tombstoned in MOR deltas) — it must still
-        # be compacted, to an empty file list, or its stale delta files
-        # would silently survive
-        for b in todo:
-            mapping.setdefault(str(b), [])
-        snap["buckets"].update(mapping)
-        # dv entries whose every covered bucket was rewritten are retired
-        # (their kill positions referenced files this commit dropped);
-        # entries straddling untouched buckets stay, with stale positions
-        # for the rewritten buckets — harmless: the anti-join matches on
-        # file path and the old paths are gone from every future scan
-        for field in ("dv", "eqdel"):
-            if snap.get(field):
-                kept = []
-                for e in snap[field]:
-                    rem = sorted(set(e.get("buckets", [])) - todo)
-                    if rem:
-                        kept.append({**e, "buckets": rem})
-                snap[field] = kept
-                if not kept:
-                    del snap[field]
-        snap["bucket_rows"] = snap.get("bucket_rows", {})
-        snap["bucket_rows"].update(
-            {b: self._files_rows(f) for b, f in mapping.items()}
-        )
-        snap["version"] += 1
-        snap["lineage"].append(
-            {
-                "batch_id": f"compact-{uuid.uuid4().hex[:8]}",
-                "operation": "compact",
-                "compacted_buckets": sorted(todo),
-            }
-        )
-        snap["changes"] = {"mode": "none"}  # structural: same logical rows
-        self._commit(snap)
+            # structural: same logical rows
+            return {"mode": "none"}, {"compacted_buckets": sorted(todo)}
+
+        self._commit_change("compact", edit)
         return len(todo)
 
     def _todo_rows(self, snap: dict, todo: set[int]) -> int:
@@ -4237,23 +4238,20 @@ class LakeTable:
         operation is metadata-only and O(1) at any table size.  Returns
         the new version number.
         """
-        cur = self.snapshot
-        if version == cur["version"]:
-            return cur["version"]
+        if version == self.snapshot["version"]:
+            return version
         old = self.snapshot_at(version)  # raises if expired
-        snap = json.loads(json.dumps(old))
-        snap["version"] = cur["version"] + 1
-        snap["lineage"] = list(old.get("lineage", [])) + [
-            {
-                "batch_id": f"rollback-{uuid.uuid4().hex[:8]}",
-                "operation": "rollback",
-                "rolled_back_from": cur["version"],
+
+        def edit(snap):
+            head = snap["version"]
+            _adopt(snap, old)
+            # state jump: diff is the feed
+            return {"mode": "diff"}, {
+                "rolled_back_from": head,
                 "restored_version": version,
             }
-        ]
-        snap["changes"] = {"mode": "diff"}  # state jump: diff is the feed
-        self._commit(snap)
-        return snap["version"]
+
+        return self._commit_change("rollback", edit)["version"]
 
     def rebucket(self, n_buckets: int) -> int:
         """Bucket-layout evolution (Iceberg partition-spec evolution for
@@ -4270,44 +4268,38 @@ class LakeTable:
         correct — the diff plan sees every file set changed and falls back
         to the full key-diff).  Returns the new version number.
         """
-        snap = json.loads(json.dumps(self.snapshot))
-        if n_buckets == snap["n_buckets"]:
-            return snap["version"]
+        if n_buckets == self.snapshot["n_buckets"]:
+            return self.snapshot["version"]
         if n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-        df = (
-            self.read(with_lsn=True)
-            .withColumn(
-                "_bucket",
-                F.pmod(
-                    F.xxhash64(*self.key_cols), F.lit(n_buckets)
-                ).cast("int"),
+
+        def edit(snap):
+            df = (
+                self.read(with_lsn=True)
+                .withColumn(
+                    "_bucket",
+                    F.pmod(
+                        F.xxhash64(*self.key_cols), F.lit(n_buckets)
+                    ).cast("int"),
+                )
+                .repartition(min(n_buckets, 64), "_bucket")
             )
-            .repartition(min(n_buckets, 64), "_bucket")
-        )
-        mapping = self._write_bucket_files(
-            df, snap["schema_id"], pre_bucketed=True
-        )
-        snap["n_buckets"] = n_buckets
-        snap["buckets"] = mapping
-        # the rewrite read resolved every dv anti-join, equality delete,
-        # and MOR fold: the new layout starts clean
-        snap.pop("dv", None)
-        snap.pop("eqdel", None)
-        snap["bucket_rows"] = {
-            b: self._files_rows(f) for b, f in mapping.items()
-        }
-        snap["version"] += 1
-        snap["lineage"].append(
-            {
-                "batch_id": f"rebucket-{uuid.uuid4().hex[:8]}",
-                "operation": "rebucket",
-                "n_buckets": n_buckets,
+            mapping = self._write_bucket_files(
+                df, snap["schema_id"], pre_bucketed=True
+            )
+            snap["n_buckets"] = n_buckets
+            snap["buckets"] = mapping
+            # the rewrite read resolved every dv anti-join, equality
+            # delete, and MOR fold: the new layout starts clean
+            snap.pop("dv", None)
+            snap.pop("eqdel", None)
+            snap["bucket_rows"] = {
+                b: self._files_rows(f) for b, f in mapping.items()
             }
-        )
-        snap["changes"] = {"mode": "none"}  # structural: same logical rows
-        self._commit(snap)
-        return snap["version"]
+            # structural: same logical rows
+            return {"mode": "none"}, {"n_buckets": n_buckets}
+
+        return self._commit_change("rebucket", edit)["version"]
 
     # ------------------------------------------------------------------ #
     # z-order clustering (Iceberg rewrite_data_files sort/z-order strategy)
@@ -4423,57 +4415,52 @@ class LakeTable:
         missing = [c for c in cluster_by if c not in schema_names]
         if missing:
             raise ValueError(f"cluster_by columns not in schema: {missing}")
-        snap = json.loads(json.dumps(self.snapshot))
-        df = self.read(with_lsn=True).withColumn("_bucket", self._bucket_expr())
-        bounds = self._zorder_bounds(df, cluster_by, n_bins)
-        # UNION the cluster columns into the existing stats set — a table
-        # created with extra stats_cols (other prune predicates) must not
-        # lose their per-file skipping because it was later z-ordered
-        stats_cols = list(
-            dict.fromkeys([*self._stats_cols(), *cluster_by])
-        )
-        n_parts = max(1, snap["n_buckets"] * max(1, target_files_per_bucket))
-        staged = df.withColumn("_zv", self._zvalue_expr(cluster_by, bounds))
-        if staged.isEmpty():
-            # repartitionByRange on an empty frame still samples; and an
-            # empty rewrite should still commit the stats property
-            mapping: dict[str, list[dict]] = {}
-        else:
-            mapping = self._write_bucket_files(
-                staged.repartitionByRange(n_parts, "_bucket", "_zv"),
-                snap["schema_id"],
-                pre_bucketed=True,
-                sort_cols=["_zv"],
-                drop_after_sort=["_zv"],
-                stats_cols=stats_cols,
+        def edit(snap):
+            df = self.read(with_lsn=True).withColumn("_bucket", self._bucket_expr())
+            bounds = self._zorder_bounds(df, cluster_by, n_bins)
+            # UNION the cluster columns into the existing stats set — a table
+            # created with extra stats_cols (other prune predicates) must not
+            # lose their per-file skipping because it was later z-ordered
+            stats_cols = list(
+                dict.fromkeys([*self._stats_cols(), *cluster_by])
             )
-        full = {str(b): [] for b in range(snap["n_buckets"])}
-        full.update(mapping)
-        snap["buckets"] = full
-        snap.pop("dv", None)  # full rewrite resolved every position kill
-        snap.pop("eqdel", None)
-        snap["bucket_rows"] = {b: self._files_rows(f) for b, f in full.items()}
-        props = snap.setdefault("properties", {})
-        props["stats_cols"] = ",".join(stats_cols)
-        # record the clustering so MAINTENANCE preserves it: compact()
-        # re-sorts rewritten buckets along the same curve instead of
-        # silently folding the layout back to key order
-        props["zorder_by"] = ",".join(cluster_by)
-        props["zorder_bins"] = n_bins
-        props["zorder_files_per_bucket"] = max(1, target_files_per_bucket)
-        snap["version"] += 1
-        snap["lineage"].append(
-            {
-                "batch_id": f"zorder-{uuid.uuid4().hex[:8]}",
-                "operation": "zorder",
+            n_parts = max(1, snap["n_buckets"] * max(1, target_files_per_bucket))
+            staged = df.withColumn("_zv", self._zvalue_expr(cluster_by, bounds))
+            if staged.isEmpty():
+                # repartitionByRange on an empty frame still samples; and an
+                # empty rewrite should still commit the stats property
+                mapping: dict[str, list[dict]] = {}
+            else:
+                mapping = self._write_bucket_files(
+                    staged.repartitionByRange(n_parts, "_bucket", "_zv"),
+                    snap["schema_id"],
+                    pre_bucketed=True,
+                    sort_cols=["_zv"],
+                    drop_after_sort=["_zv"],
+                    stats_cols=stats_cols,
+                )
+            full = {str(b): [] for b in range(snap["n_buckets"])}
+            full.update(mapping)
+            snap["buckets"] = full
+            snap.pop("dv", None)  # full rewrite resolved every position kill
+            snap.pop("eqdel", None)
+            snap["bucket_rows"] = {b: self._files_rows(f) for b, f in full.items()}
+            props = snap.setdefault("properties", {})
+            props["stats_cols"] = ",".join(stats_cols)
+            # record the clustering so MAINTENANCE preserves it: compact()
+            # re-sorts rewritten buckets along the same curve instead of
+            # silently folding the layout back to key order
+            props["zorder_by"] = ",".join(cluster_by)
+            props["zorder_bins"] = n_bins
+            props["zorder_files_per_bucket"] = max(1, target_files_per_bucket)
+            # structural: same logical rows
+            return {"mode": "none"}, {
                 "cluster_by": list(cluster_by),
                 "n_bins": n_bins,
                 "n_files": sum(len(f) for f in full.values()),
             }
-        )
-        snap["changes"] = {"mode": "none"}  # structural: same logical rows
-        self._commit(snap)
-        return snap["version"]
+
+        return self._commit_change("zorder", edit)["version"]
 
     def files_admitted(
         self, prune: dict, buckets: set[int] | None = None
@@ -4510,8 +4497,8 @@ class LakeTable:
     # ------------------------------------------------------------------ #
     def history(self) -> DataFrame:
         """Commit history as a DataFrame: one row per lineage record of
-        the CURRENT snapshot (batch merges, compactions, rebuckets,
-        rollbacks, z-order rewrites), most recent last.  Non-scalar
+        the CURRENT snapshot (every commit writes one: merges, DML, DDL,
+        maintenance, publishes), most recent last.  Non-scalar
         details (watermarks, per-phase timings) ride in a JSON column —
         schema-stable regardless of which operations the table has seen.
         """
@@ -4824,20 +4811,15 @@ class LakeTable:
         clone to a self-contained table without blocking the instant-fork
         moment; after it returns, the source table can be retired
         entirely.  Idempotent; returns the number of files copied."""
-        snap = json.loads(json.dumps(self.snapshot))
-        copied = _localize_snap(snap, self.root)
-        if copied == 0:
-            return 0
-        snap["changes"] = {"mode": "none"}  # metadata-only: no row changed
-        snap["lineage"] = list(snap.get("lineage", [])) + [
-            {
-                "batch_id": f"localize-{uuid.uuid4().hex[:8]}",
-                "operation": "localize",
-                "files_copied": copied,
-            }
-        ]
-        self._commit(snap)
-        return copied
+        def edit(snap):
+            copied = _localize_snap(snap, self.root)
+            if copied == 0:
+                return None
+            # metadata-only: no row changed
+            return {"mode": "none"}, {"files_copied": copied}
+
+        snap = self._commit_change("localize", edit)
+        return 0 if snap is None else snap["lineage"][-1]["files_copied"]
 
     def drop(self) -> None:
         shutil.rmtree(self.root, ignore_errors=True)

@@ -57,12 +57,11 @@ from __future__ import annotations
 import json
 import os
 import time
-import uuid
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from cdm_cbioportal_etl_spark.lake.table import LakeTable, MergeStats
+from cdm_cbioportal_etl_spark.lake.table import LakeTable, MergeStats, _fsync_write
 
 __all__ = ["CatalogConflictError", "LakeCatalog", "MultiTableTransaction"]
 
@@ -71,23 +70,6 @@ _NAME_RE = r"[A-Za-z_][A-Za-z0-9_.-]*"
 
 class CatalogConflictError(RuntimeError):
     """Another writer advanced the catalog past this publisher's base."""
-
-
-def _fsync_write(path: str, payload: str) -> None:
-    """Contents fsync'd, atomic rename, directory entry fsync'd — the
-    repo-wide pointer durability order (table.py:_write_ref)."""
-    d = os.path.dirname(path)
-    tmp = os.path.join(d, f".{os.path.basename(path)}.{uuid.uuid4().hex}")
-    with open(tmp, "w") as fh:
-        fh.write(payload)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, path)
-    dfd = os.open(d, os.O_RDONLY)
-    try:
-        os.fsync(dfd)
-    finally:
-        os.close(dfd)
 
 
 class LakeCatalog:

@@ -20,11 +20,11 @@ over the engine's merge-on-read delta format:
   task-commit model; nothing row-shaped ever reaches the driver.
 * **driver commit**: assembles ONE snapshot commit from the collected
   commit messages — append the delta entries to their buckets, advance
-  the ledger to max(lsn), stamp lineage — through the same O_EXCL
-  token protocol as every other commit (``LakeTable._commit`` is pure
-  metadata I/O, so the driver needs no SparkSession).  A lost commit
-  race re-bases onto the new head and retries; the data files are
-  already on disk and carry over untouched.
+  the ledger to max(lsn), stamp lineage — through the same commit path
+  as every other commit (``LakeTable._commit_change`` is pure metadata
+  I/O, so the driver needs no SparkSession).  A lost commit race
+  re-bases onto the new head and retries; the data files are already
+  on disk and carry over untouched.
 
 Exactly-once: batch-mode redelivery of an applied interval dies at the
 ledger pre-filter (tasks see the committed watermark); a streaming
@@ -61,7 +61,6 @@ from pyspark.sql.datasource import (
 from .table import (
     DELETED_COL,
     LSN_COL,
-    ConcurrentCommitError,
     LakeTable,
     schema_from_json,
     schema_pnames,
@@ -231,11 +230,14 @@ class LakeDeltaBatchWriter(DataSourceArrowWriter):
         lsn_np = tbl.column("lsn").to_numpy(zero_copy_only=False)
         max_lsn = int(lsn_np.max())
         if self.prebucketed:
-            b_np = (
-                tbl.column("_bucket")
-                .to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
+            b_col = tbl.column("_bucket")
+            if b_col.null_count:
+                raise ValueError(
+                    f"laketable writer: _bucket is null in {b_col.null_count} "
+                    "row(s) — compute it with table.bucket_expr() against "
+                    "THIS table"
+                )
+            b_np = b_col.to_numpy(zero_copy_only=False).astype(np.int64)
             bad = (b_np < 0) | (b_np >= self.n_buckets)
             if bad.any():
                 raise ValueError(
@@ -318,10 +320,10 @@ class LakeDeltaBatchWriter(DataSourceArrowWriter):
             max_lsn = max(max_lsn, m.max_lsn)
         if not entries:
             return {"rows": 0, "max_lsn": max_lsn, "buckets": 0}
-        last_err: Exception | None = None
-        for _ in range(4):  # optimistic-concurrency re-base
-            t = _meta_handle(self.root, self.ref)
-            snap = json.loads(json.dumps(t.snapshot))
+        t = _meta_handle(self.root, self.ref)
+        touched = sorted({int(b) for b, _ in entries})
+
+        def edit(snap):
             if segment and segment in snap["ledger"].get(
                 "applied_segments", []
             ):
@@ -329,8 +331,7 @@ class LakeDeltaBatchWriter(DataSourceArrowWriter):
                 # Spark's checkpoint write: already durable — skip (the
                 # written duplicate files are unreferenced and vanish
                 # with their dsw dir on vacuum)
-                return {"rows": 0, "max_lsn": max_lsn, "buckets": 0,
-                        "skipped_epoch": segment}
+                return None
             if int(snap["n_buckets"]) != self.n_buckets or int(
                 snap["schema_id"]
             ) != self.schema_id:
@@ -339,16 +340,10 @@ class LakeDeltaBatchWriter(DataSourceArrowWriter):
                     "and commit (rebucket or schema evolution) — the "
                     "written delta files no longer fit; re-run the write"
                 )
-            touched = set()
-            bucket_rows = dict(snap.get("bucket_rows", {}))
+            bucket_rows = snap.setdefault("bucket_rows", {})
             for b, fobj in entries:
                 snap["buckets"].setdefault(b, []).append(fobj)
-                bucket_rows[b] = int(bucket_rows.get(b, 0)) + int(
-                    fobj["rows"]
-                )
-                touched.add(int(b))
-            snap["bucket_rows"] = bucket_rows
-            snap["changes"] = {"mode": "diff"}
+                bucket_rows[b] = int(bucket_rows.get(b, 0)) + int(fobj["rows"])
             snap["ledger"]["applied_lsn"] = max(
                 int(snap["ledger"]["applied_lsn"]), max_lsn
             )
@@ -364,34 +359,19 @@ class LakeDeltaBatchWriter(DataSourceArrowWriter):
                 if segment not in seg:
                     seg = list(seg) + [segment]
                 snap["ledger"]["applied_segments"] = seg[-max_keep:]
-            import time as _time
+            return {"mode": "diff"}, {
+                "lsn_max": max_lsn,
+                "batch_rows": rows,
+                "touched_buckets": touched,
+                "writer": "datasource-delta-append",
+            }
 
-            snap["lineage"].append(
-                {
-                    "at": round(_time.time(), 3),
-                    "batch_id": batch_id,
-                    "operation": "merge",
-                    "lsn_max": max_lsn,
-                    "batch_rows": rows,
-                    "touched_buckets": sorted(touched),
-                    "writer": "datasource-delta-append",
-                }
-            )
-            max_lineage = int(
-                snap.get("properties", {}).get("max_lineage", 5000)
-            )
-            if len(snap["lineage"]) > max_lineage:
-                snap["lineage"] = snap["lineage"][-max_lineage:]
-            try:
-                t._commit(snap)
-                return {
-                    "rows": rows,
-                    "max_lsn": max_lsn,
-                    "buckets": len(touched),
-                }
-            except ConcurrentCommitError as e:
-                last_err = e  # racer advanced the head: re-base and retry
-        raise last_err  # type: ignore[misc]
+        if t._retry_on_conflict(
+            lambda: t._commit_change("merge", edit, batch_id)
+        ) is None:
+            return {"rows": 0, "max_lsn": max_lsn, "buckets": 0,
+                    "skipped_epoch": segment}
+        return {"rows": rows, "max_lsn": max_lsn, "buckets": len(touched)}
 
     def commit(self, messages) -> None:
         self._commit_entries(messages, f"dsw-{uuid.uuid4().hex[:12]}")

@@ -47,7 +47,6 @@ class WalTailReader:
         checkpoint_dir: str,
         max_files_per_trigger: int = 8,
         registry=None,
-        on_stale_segment: str = "fail",
         views=None,
         merge_kwargs: dict | None = None,
     ):
@@ -71,20 +70,6 @@ class WalTailReader:
         # optional SchemaRegistry: evolution DDL is issued BEFORE the batch
         # merge, so events referencing a newer schema never apply first
         self.registry = registry
-        # Out-of-order-segment policy.  The global applied_lsn watermark
-        # alone cannot distinguish (a) harmless redelivery of an
-        # already-applied segment from (b) a LATE-ARRIVING segment carrying
-        # lower LSNs (parallel producers, backfill, clock skew) whose rows
-        # the watermark filter would silently drop.  The ledger therefore
-        # also records every applied segment file; a batch containing
-        # below-watermark rows from a segment the ledger has NOT seen is
-        # data loss in the making and triggers this policy:
-        #   "fail"   raise (default — fail the stream, operator intervenes)
-        #   "warn"   log to stderr and drop (prior behavior, now visible)
-        #   "ignore" drop silently
-        if on_stale_segment not in ("fail", "warn", "ignore"):
-            raise ValueError(f"invalid on_stale_segment: {on_stale_segment}")
-        self.on_stale_segment = on_stale_segment
 
     def _stream(self) -> DataFrame:
         # file streams need an explicit schema; infer it from the WAL files
@@ -112,14 +97,19 @@ class WalTailReader:
         )
 
     def _segment_guard(self, batch: DataFrame) -> list[str]:
-        """Detect late-arriving segments (new file, below-watermark LSNs).
+        """Fail on late-arriving segments (new file, below-watermark LSNs).
+
+        The applied_lsn watermark alone cannot tell harmless redelivery
+        of an applied segment from a LATE segment carrying lower LSNs
+        (parallel producers, backfill, clock skew) whose rows the
+        watermark filter would silently drop; the ledger therefore also
+        records every applied segment file, and a below-watermark segment
+        it has not seen raises (the operator intervenes).
 
         Slim-column agg (file name + lsn only; bounded by
         maxFilesPerTrigger rows out) — never a payload scan.  Returns the
         batch's segment names so the merge can record them in the ledger.
         """
-        import sys
-
         ledger = self.table.snapshot["ledger"]
         applied = ledger["applied_lsn"]
         seen = set(ledger.get("applied_segments", []))
@@ -134,15 +124,11 @@ class WalTailReader:
             and r["_min_lsn"] <= applied
         )
         if stale:
-            msg = (
+            raise RuntimeError(
                 f"WAL segments arrived with lsn <= applied watermark {applied} "
                 f"but were never applied (out-of-order/late segments): {stale}. "
                 "Their below-watermark rows would be silently dropped."
             )
-            if self.on_stale_segment == "fail":
-                raise RuntimeError(msg)
-            if self.on_stale_segment == "warn":
-                print(f"WARNING: {msg}", file=sys.stderr)
         return sorted(r["_seg"] for r in segs)
 
     def _apply_batch(self, batch: DataFrame, epoch_id: int) -> None:
